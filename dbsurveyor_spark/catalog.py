@@ -8,8 +8,14 @@ here materialized as parquet directories registered as temp views.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterable
+from concurrent.futures import ThreadPoolExecutor
+from typing import TypeVar
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+
+T = TypeVar("T")
 
 # Runtime-settable SQLConf entries every query in this engine depends on.
 # These are ALSO set in session.py's builder, but the driver harness (and any
@@ -133,3 +139,32 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
         df.createOrReplaceTempView(name)
         out[name] = df
     return out
+
+
+def map_tables(
+    spark: SparkSession, fn: Callable[[str], T], names: Iterable[str]
+) -> list[T]:
+    """``[fn(name) for name in names]``, run on a thread pool.
+
+    Per-table survey work is a few small jobs of one task each; run one
+    table at a time, it leaves all but one core idle. The pool keeps
+    ``min(len(names), defaultParallelism)`` tables in flight. Results come
+    back in ``names`` order; if calls fail, the exception of the first
+    failing name is re-raised once the running calls have ended.
+
+    Each call is wrapped with ``inheritable_thread_target(spark)`` in the
+    caller's thread, so its jobs carry the caller's job group, description
+    and tags. The wrapper captures a copy of the caller's local properties;
+    wrapping once per call gives every concurrent call its own copy, which
+    Spark then mutates (SQL execution ids) without the calls seeing each
+    other's.
+    """
+    names = list(names)
+    width = min(len(names), spark.sparkContext.defaultParallelism)
+    if width <= 1:
+        return [fn(n) for n in names]
+    with ThreadPoolExecutor(max_workers=width) as pool:
+        futures = [
+            pool.submit(inheritable_thread_target(spark)(fn), n) for n in names
+        ]
+        return [f.result() for f in futures]

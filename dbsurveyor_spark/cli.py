@@ -92,40 +92,50 @@ def _sample_tables(
     spark, sf_dir: str, limit: int, mode: str, throttle_ms: int | None = None
 ) -> list[dict]:
     """Reference-shaped TableSample list (models.rs:399): deterministic
-    head-by-first-column rows, redacted before entering the document."""
+    head-by-first-column rows, redacted before entering the document.
+
+    Tables are fetched concurrently (``map_tables``), except under
+    ``--throttle``, whose reference meaning is a fixed delay between
+    per-table operations (collect.rs:72), so those run one after another.
+    """
     import time
 
     from pyspark.sql import functions as F
 
-    from .catalog import TABLES, load_table
+    from .catalog import TABLES, load_table, map_tables
     from .security import redact_rows
 
-    out = []
-    for i, tname in enumerate(TABLES):
-        if throttle_ms and i:
-            # reference --throttle (collect.rs:72): fixed delay between
-            # per-table operations for low-footprint collection
-            time.sleep(throttle_ms / 1000.0)
+    def fetch(tname: str) -> tuple[list[dict], str]:
         df = load_table(spark, sf_dir, tname)
         order_col = df.columns[0]
         rows = [
             r.asDict(recursive=True)
             for r in df.orderBy(F.desc(order_col)).limit(limit).collect()
         ]
-        out.append(
-            {
-                "table_name": tname,
-                "schema_name": None,
-                "rows": redact_rows(rows, mode) if mode != "none" else rows,
-                "sample_size": len(rows),
-                "total_rows": None,
-                "sampling_strategy": {"MostRecent": {"limit": limit}},
-                "collected_at": datetime.now(timezone.utc).isoformat(),
-                "warnings": [],
-                "sample_status": "Complete",
-            }
-        )
-    return out
+        return rows, datetime.now(timezone.utc).isoformat()
+
+    if throttle_ms:
+        fetched = []
+        for i, tname in enumerate(TABLES):
+            if i:
+                time.sleep(throttle_ms / 1000.0)
+            fetched.append(fetch(tname))
+    else:
+        fetched = map_tables(spark, fetch, TABLES)
+    return [
+        {
+            "table_name": tname,
+            "schema_name": None,
+            "rows": redact_rows(rows, mode) if mode != "none" else rows,
+            "sample_size": len(rows),
+            "total_rows": None,
+            "sampling_strategy": {"MostRecent": {"limit": limit}},
+            "collected_at": collected_at,
+            "warnings": [],
+            "sample_status": "Complete",
+        }
+        for tname, (rows, collected_at) in zip(TABLES, fetched)
+    ]
 
 
 def cmd_collect(args: argparse.Namespace) -> int:

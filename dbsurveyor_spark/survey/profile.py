@@ -13,8 +13,8 @@ Scale notes:
   makes these near-free (no full scans).
 - `column_profile` is one single-pass aggregate over the table (all per-column
   stats in one job, map-side combinable). Exact `count(distinct)` is kept
-  because the correctness oracle needs exact values; the scale path is
-  `approx_count_distinct` (see `column_profile_approx`).
+  because the correctness oracle needs exact values; the scale path is an
+  HLL sketch, `approx_distinct` (see `column_profile_approx`).
 - key inference aggregates shuffle only on the candidate key columns.
 """
 
@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import TABLES, load_table
-from ..functions.aggregates import DECIMAL_T
+from ..functions.aggregates import DECIMAL_T, approx_distinct
 
 # (table, column, kind) — kind drives which min/max representation is used.
 _NUMERIC = "num"
@@ -182,15 +182,15 @@ def survey_column_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def column_profile_approx(
     spark: SparkSession, sf_dir: str, table: str, rsd: float = 0.02
 ) -> DataFrame:
-    """Scale-path profile: approx_count_distinct (HLL) instead of exact
-    distinct — one pass, no distinct-expand, for interactive 100 TB profiling.
-    Not oracle-checked (approx by construction)."""
+    """Scale-path profile: an HLL sketch (`approx_distinct`) instead of
+    exact distinct — one pass, no distinct-expand, for interactive 100 TB
+    profiling. Not oracle-checked (approx by construction)."""
     df = load_table(spark, sf_dir, table)
     aggs = [F.count(F.lit(1)).alias("__total")]
     for col in df.columns:
         aggs += [
             F.count(F.col(col)).alias(f"{col}__nonnull"),
-            F.approx_count_distinct(F.col(col), rsd).alias(f"{col}__distinct"),
+            approx_distinct(F.col(col), rsd).alias(f"{col}__distinct"),
         ]
     one = df.agg(*aggs)
     rows = [
@@ -498,8 +498,8 @@ WHERE CAST(i.n_common AS DOUBLE) / cs.n_distinct
 
 
 def survey_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry for the HLL scale path (rows-only driver check:
-    approx_count_distinct has no exact SQL oracle by construction)."""
+    """Registry entry for the HLL scale path (rows-only registry check: an
+    approximate distinct count has no exact SQL oracle by construction)."""
     return column_profile_approx(spark, sf_dir, PROFILE_TABLE)
 
 

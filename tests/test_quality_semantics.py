@@ -185,6 +185,108 @@ class TestDocumentMetricsReferenceShape:
             )
 
 
+    def test_rows_differing_only_in_null_position_are_distinct(
+        self, spark, tmp_path
+    ):
+        from dbsurveyor_spark.survey.quality import collect_quality_metrics
+
+        # Spark's struct hash skips NULL fields, so (1, NULL) and (NULL, 1)
+        # hash alike unless the row's NULL-position mask is hashed too.
+        rows = [(1, None), (None, 1), (2, 2), (2, 2)]
+        lake = self._lake(spark, tmp_path, rows, "a int, b int")
+        (m,) = collect_quality_metrics(spark, lake, ["orders"])
+        assert m["uniqueness"]["duplicate_row_count"] == 1
+
+
+# --------------------------------------------------- distinct-count sketches
+# approx_distinct (functions/aggregates.py) backs the document's uniqueness
+# metrics; map_tables (catalog.py) runs their per-table jobs concurrently.
+
+RSD = 0.02
+
+
+def test_approx_distinct_within_three_rsd_on_every_column(spark):
+    from dbsurveyor_spark.catalog import TABLES, load_table
+    from dbsurveyor_spark.functions.aggregates import approx_distinct
+
+    for t in TABLES:
+        df = load_table(spark, SF, t)
+        r = df.agg(
+            *[approx_distinct(F.col(c), RSD).alias(f"{c}__a") for c in df.columns],
+            *[F.count_distinct(F.col(c)).alias(f"{c}__e") for c in df.columns],
+        ).first()
+        for c in df.columns:
+            est, exact = r[f"{c}__a"], r[f"{c}__e"]
+            assert abs(est - exact) <= 3 * RSD * exact, (t, c, est, exact)
+
+
+def test_approx_distinct_exact_at_low_cardinality(spark):
+    from dbsurveyor_spark.functions.aggregates import approx_distinct
+
+    for k in (1, 51, 300):
+        df = spark.range(3 * k).select((F.col("id") % k).cast("string").alias("v"))
+        assert df.agg(approx_distinct(F.col("v"), RSD)).first()[0] == k
+    # NULLs are not values (xxhash64(NULL) would be the seed, 42)
+    nulls = spark.createDataFrame([(None,), (None,), (7,)], "v int")
+    assert nulls.agg(approx_distinct(F.col("v"), RSD)).first()[0] == 1
+    empty = spark.createDataFrame([], "v int")
+    assert empty.agg(approx_distinct(F.col("v"), RSD)).first()[0] == 0
+
+
+class TestTablePool:
+    def test_pooled_metrics_equal_single_table_calls(self, spark):
+        from dbsurveyor_spark.catalog import TABLES
+        from dbsurveyor_spark.survey.quality import collect_quality_metrics
+
+        def strip(m):
+            return {k: v for k, v in m.items() if k != "analyzed_at"}
+
+        pooled = collect_quality_metrics(spark, SF)
+        assert [m["table_name"] for m in pooled] == list(TABLES)
+        single = [collect_quality_metrics(spark, SF, [t])[0] for t in TABLES]
+        assert [strip(m) for m in pooled] == [strip(m) for m in single]
+
+    def test_order_kept_and_caller_job_group_inherited(self, spark):
+        import time
+        import warnings
+
+        from dbsurveyor_spark.catalog import map_tables
+
+        sc = spark.sparkContext
+        names = ["a", "b", "c", "d", "e"]
+
+        def work(name):
+            # later names finish first; the result must keep input order
+            time.sleep(0.05 * (len(names) - names.index(name)))
+            return name, spark.range(10).count()
+
+        sc.setJobGroup("map-tables-test", "pool inheritance")
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("error")  # e.g. "Tags will not be inherited"
+                out = map_tables(spark, work, names)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert out == [(n, 10) for n in names]
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        jobs = sc.statusTracker().getJobIdsForGroup("map-tables-test")
+        assert len(jobs) >= len(names)
+
+    def test_first_error_propagates(self, spark):
+        import pytest as _pytest
+
+        from dbsurveyor_spark.catalog import map_tables
+
+        def work(name):
+            if name == "bad":
+                raise ValueError(name)
+            return name
+
+        with _pytest.raises(ValueError, match="bad"):
+            map_tables(spark, work, ["ok", "bad", "ok2"])
+
+
 class TestSqlitePathParsing:
     def test_literal_query_and_fragment_chars_survive(self):
         from dbsurveyor_spark.cli import _sqlite_path
