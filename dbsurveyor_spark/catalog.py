@@ -8,6 +8,7 @@ here materialized as parquet directories registered as temp views.
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Callable, Iterable
 from concurrent.futures import ThreadPoolExecutor
 from typing import TypeVar
@@ -141,8 +142,35 @@ def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return out
 
 
+def load_tables(
+    spark: SparkSession,
+    sf_dir: str,
+    names: Iterable[str] = TABLES,
+    *,
+    throttle_ms: int | None = None,
+) -> dict[str, DataFrame]:
+    """``{name: load_table(spark, sf_dir, name)}``, resolved through
+    ``map_tables``.
+
+    Resolving a table runs Spark's parquet schema-inference job (footer
+    reads), a fixed cost per call whatever the table's size. A command
+    that reads the same tables in several steps resolves them once here
+    and hands the frames to each step; the pool runs the schema jobs side
+    by side. Nothing is kept between calls.
+    """
+    names = list(names)
+    frames = map_tables(
+        spark, lambda n: load_table(spark, sf_dir, n), names, throttle_ms=throttle_ms
+    )
+    return dict(zip(names, frames))
+
+
 def map_tables(
-    spark: SparkSession, fn: Callable[[str], T], names: Iterable[str]
+    spark: SparkSession,
+    fn: Callable[[str], T],
+    names: Iterable[str],
+    *,
+    throttle_ms: int | None = None,
 ) -> list[T]:
     """``[fn(name) for name in names]``, run on a thread pool.
 
@@ -152,6 +180,11 @@ def map_tables(
     back in ``names`` order; if calls fail, the exception of the first
     failing name is re-raised once the running calls have ended.
 
+    With ``throttle_ms`` (the CLI's ``--throttle``, whose reference meaning
+    is a fixed delay between per-table operations, collect.rs:72) the calls
+    run one after another in the caller's thread, that many milliseconds
+    apart.
+
     Each call is wrapped with ``inheritable_thread_target(spark)`` in the
     caller's thread, so its jobs carry the caller's job group, description
     and tags. The wrapper captures a copy of the caller's local properties;
@@ -160,6 +193,13 @@ def map_tables(
     other's.
     """
     names = list(names)
+    if throttle_ms:
+        out = []
+        for i, n in enumerate(names):
+            if i:
+                time.sleep(throttle_ms / 1000.0)
+            out.append(fn(n))
+        return out
     width = min(len(names), spark.sparkContext.defaultParallelism)
     if width <= 1:
         return [fn(n) for n in names]

@@ -89,7 +89,7 @@ def _sqlite_path(url: str) -> str:
 
 
 def _sample_tables(
-    spark, sf_dir: str, limit: int, mode: str, throttle_ms: int | None = None
+    spark, frames: dict, limit: int, mode: str, throttle_ms: int | None = None
 ) -> list[dict]:
     """Reference-shaped TableSample list (models.rs:399): deterministic
     head-by-first-column rows, redacted before entering the document.
@@ -97,16 +97,16 @@ def _sample_tables(
     Tables are fetched concurrently (``map_tables``), except under
     ``--throttle``, whose reference meaning is a fixed delay between
     per-table operations (collect.rs:72), so those run one after another.
+    ``frames`` holds every catalog table, resolved once by ``collect``
+    (``catalog.load_tables``) for all of its steps.
     """
-    import time
-
     from pyspark.sql import functions as F
 
-    from .catalog import TABLES, load_table, map_tables
+    from .catalog import TABLES, map_tables
     from .security import redact_rows
 
     def fetch(tname: str) -> tuple[list[dict], str]:
-        df = load_table(spark, sf_dir, tname)
+        df = frames[tname]
         order_col = df.columns[0]
         rows = [
             r.asDict(recursive=True)
@@ -114,14 +114,7 @@ def _sample_tables(
         ]
         return rows, datetime.now(timezone.utc).isoformat()
 
-    if throttle_ms:
-        fetched = []
-        for i, tname in enumerate(TABLES):
-            if i:
-                time.sleep(throttle_ms / 1000.0)
-            fetched.append(fetch(tname))
-    else:
-        fetched = map_tables(spark, fetch, TABLES)
+    fetched = map_tables(spark, fetch, TABLES, throttle_ms=throttle_ms)
     return [
         {
             "table_name": tname,
@@ -232,16 +225,22 @@ def cmd_collect(args: argparse.Namespace) -> int:
                 name=args.name or os.path.basename(args.source.rstrip("/")),
             )
             return _emit_collect(doc, args)
+        # Resolve each table once for every step below: each resolution is
+        # a parquet schema-inference job, whatever the table's size.
+        from .catalog import load_tables
+
+        frames = load_tables(spark, args.source, throttle_ms=args.throttle)
         doc = collect_database_schema(
             spark,
             args.source,
             name=args.name or os.path.basename(args.source.rstrip("/")),
             infer_keys=not args.no_infer_keys,
+            frames=frames,
         )
         if args.sample:
             doc["samples"] = _sample_tables(
                 spark,
-                args.source,
+                frames,
                 args.sample,
                 args.redact_mode,
                 throttle_ms=args.throttle,
@@ -269,7 +268,7 @@ def cmd_collect(args: argparse.Namespace) -> int:
                 print(f"invalid quality config: {exc}", file=sys.stderr)
                 return 2
             doc["quality_metrics"] = collect_quality_metrics(
-                spark, args.source, config=cfg
+                spark, args.source, config=cfg, frames=frames
             )
     elif args.source.startswith("sqlite:"):
         from .sources.sqlite import SqliteSource

@@ -16,6 +16,28 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
+MAX_DEFAULT_HEAP_MB = 48 * 1024
+
+
+def default_heap(mem_total_bytes: int | None) -> tuple[str, str]:
+    """Default driver ``-Xmx`` and ``-Xms`` for a host with this much
+    physical memory: min(48g, half of it), and half of that.
+
+    The JVM pre-touches all of ``-Xms`` at start, so a fixed 24g floor
+    kills it on any host with less free memory than that. ``None``
+    (memory size unknown) keeps the 48g/24g of a large host.
+    """
+    heap_mb = MAX_DEFAULT_HEAP_MB
+    if mem_total_bytes is not None:
+        heap_mb = min(heap_mb, mem_total_bytes // (2 * 1024 * 1024))
+    return f"{heap_mb}m", f"{heap_mb // 2}m"
+
+
+def _mem_total_bytes() -> int | None:
+    try:
+        return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    except (AttributeError, OSError, ValueError):  # no sysconf or no such name
+        return None
 
 
 def get_session(
@@ -29,14 +51,15 @@ def get_session(
     to ``local[$SPARK_GRAFT_CPUS]``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", "48g")
+    heap, xms = default_heap(_mem_total_bytes())
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEMORY", heap)
     # Pre-size and pre-touch a floor of the heap: with only -Xmx set, the
     # JVM starts tiny and the first allocation-heavy query pays dozens of
     # growth GCs (measured: a dedup first pass at 52 s that steady-states
     # at 3 s; with -Xms+AlwaysPreTouch the same first pass is ~10 s).
     # Harmless on a cluster — executors get the same flags via
     # spark.executor.extraJavaOptions in spark-submit conf instead.
-    driver_xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", "24g")
+    driver_xms = os.environ.get("SPARK_GRAFT_DRIVER_XMS", xms)
     # Diagnostics hook (GC logs, JIT logging, …) without editing code.
     extra_opts = os.environ.get("SPARK_GRAFT_EXTRA_JAVA_OPTS", "")
     builder = (

@@ -27,7 +27,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import TABLES, load_table
+from ..catalog import TABLES, load_table, load_tables
 from ..functions.aggregates import DECIMAL_T, approx_distinct
 
 # (table, column, kind) — kind drives which min/max representation is used.
@@ -51,20 +51,30 @@ PROFILE_COLUMNS = [
 ]
 
 
-def survey_schema_overview(spark: SparkSession, sf_dir: str) -> DataFrame:
+def survey_schema_overview(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    frames: dict[str, DataFrame] | None = None,
+) -> DataFrame:
     """Per-table row count + column count (the `analyze` summary surface,
-    `/root/reference/dbsurveyor/src/output.rs:136 generate_json_analysis`)."""
-    frames = []
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        frames.append(
-            df.agg(
-                F.lit(name).alias("table_name"),
-                F.count(F.lit(1)).alias("row_count"),
-                F.lit(len(df.columns)).cast("bigint").alias("column_count"),
-            )
+    `/root/reference/dbsurveyor/src/output.rs:136 generate_json_analysis`).
+
+    Load-once rule: ``frames`` maps table name to the frame a caller has
+    already resolved (``catalog.load_tables``); with ``None`` the tables
+    are resolved here, once each.
+    """
+    if frames is None:
+        frames = load_tables(spark, sf_dir)
+    counts = [
+        frames[name].agg(
+            F.lit(name).alias("table_name"),
+            F.count(F.lit(1)).alias("row_count"),
+            F.lit(len(frames[name].columns)).cast("bigint").alias("column_count"),
         )
-    return reduce(DataFrame.unionByName, frames)
+        for name in TABLES
+    ]
+    return reduce(DataFrame.unionByName, counts)
 
 
 def _overview_sql() -> str:
@@ -247,12 +257,21 @@ PK_CANDIDATES = [
 ]
 
 
-def survey_pk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    frames = []
+def survey_pk_inference(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    frames: dict[str, DataFrame] | None = None,
+) -> DataFrame:
+    """Candidate primary keys: columns whose distinct count equals the row
+    count. Follows the load-once rule of `survey_schema_overview`: each
+    table in ``PK_CANDIDATES`` is resolved once, not once per candidate."""
+    if frames is None:
+        frames = load_tables(spark, sf_dir, dict.fromkeys(t for t, _ in PK_CANDIDATES))
+    stats = []
     for table, col in PK_CANDIDATES:
-        df = load_table(spark, sf_dir, table)
-        frames.append(
-            df.agg(
+        stats.append(
+            frames[table].agg(
                 F.lit(table).alias("table_name"),
                 F.lit(col).alias("column_name"),
                 F.count(F.lit(1)).alias("total_rows"),
@@ -267,7 +286,7 @@ def survey_pk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("is_candidate_key"),
             )
         )
-    return reduce(DataFrame.unionByName, frames)
+    return reduce(DataFrame.unionByName, stats)
 
 
 def _pk_sql() -> str:
@@ -296,28 +315,41 @@ FK_CANDIDATES = [
 ]
 
 
-def survey_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
+def survey_fk_inference(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    frames: dict[str, DataFrame] | None = None,
+) -> DataFrame:
     """FK detection via key containment: |child∩parent| / |child distinct|.
 
     Distinct child keys (small after distinct) semi-join the parent keys;
     at scale the parent-distinct side of bounded dims is broadcast by AQE.
+    Follows the load-once rule of `survey_schema_overview`: each table
+    named in ``FK_CANDIDATES`` is resolved once, not once per edge end.
     """
-    frames = []
+    if frames is None:
+        frames = load_tables(
+            spark,
+            sf_dir,
+            dict.fromkeys(t for ct, _, pt, _ in FK_CANDIDATES for t in (ct, pt)),
+        )
+    edges = []
     for ct, cc, pt, pc in FK_CANDIDATES:
         # NULL child keys don't participate in FK semantics (and the oracle's
         # COUNT(DISTINCT) excludes them) — drop them before the distinct.
         child = (
-            load_table(spark, sf_dir, ct)
+            frames[ct]
             .select(F.col(cc).alias("k"))
             .filter(F.col("k").isNotNull())
             .distinct()
         )
-        parent = load_table(spark, sf_dir, pt).select(F.col(pc).alias("k")).distinct()
+        parent = frames[pt].select(F.col(pc).alias("k")).distinct()
         matched = child.join(parent, "k", "left_semi")
         stats = child.agg(F.count(F.lit(1)).alias("child_distinct")).crossJoin(
             matched.agg(F.count(F.lit(1)).alias("matched_distinct"))
         )
-        frames.append(
+        edges.append(
             stats.select(
                 F.lit(ct).alias("child_table"),
                 F.lit(cc).alias("child_column"),
@@ -331,7 +363,7 @@ def survey_fk_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("is_foreign_key"),
             )
         )
-    return reduce(DataFrame.unionByName, frames)
+    return reduce(DataFrame.unionByName, edges)
 
 
 def _fk_sql() -> str:

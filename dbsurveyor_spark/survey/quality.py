@@ -732,6 +732,7 @@ def collect_quality_metrics(
     config: QualityConfig | None = None,
     rsd: float = 0.02,
     z_threshold: float | None = None,
+    frames: dict[str, DataFrame] | None = None,
 ) -> list[dict]:
     """TableQualityMetrics-shaped dicts for the schema document
     (quality/models.rs:273 TableQualityMetrics; analyzer.rs:104 weighted
@@ -771,10 +772,15 @@ def collect_quality_metrics(
     (1, NULL) and (NULL, 1) would hash alike and count as one. At 100 TB
     both passes are single linear scans with tiny aggregation state,
     map-side combinable.
+
+    Load-once rule: ``frames`` maps each of ``tables`` to the frame the
+    caller resolved (``catalog.load_tables``), so a `collect` that also
+    samples and builds the schema reads each table's footers once. With
+    ``None`` the tables are resolved here, once each.
     """
     from datetime import datetime, timezone
 
-    from ..catalog import TABLES, map_tables
+    from ..catalog import TABLES, load_tables, map_tables
 
     names = tables if tables is not None else list(TABLES)
     if config is None:
@@ -782,6 +788,8 @@ def collect_quality_metrics(
     config.validate()
     if z_threshold is None:
         z_threshold = config.z_score_threshold
+    if frames is None:
+        frames = load_tables(spark, sf_dir, names)
     if not config.enabled:
         # analyzer.rs:68-76 — disabled analysis returns
         # TableQualityMetrics::new(...): analyzed_rows = the ACTUAL row
@@ -789,11 +797,12 @@ def collect_quality_metrics(
         # (models.rs:121,167,231 Default impls: score 1.0, empty lists),
         # anomalies: None, quality_score 1.0, no violations. The document
         # shape must be identical whether analysis ran or was skipped.
+        rows = map_tables(spark, lambda t: frames[t].count(), names)
         return [
             {
                 "table_name": t,
                 "schema_name": None,
-                "analyzed_rows": load_table(spark, sf_dir, t).count(),
+                "analyzed_rows": n,
                 "completeness": {"score": 1.0, "null_columns": []},
                 "consistency": {
                     "score": 1.0,
@@ -810,7 +819,7 @@ def collect_quality_metrics(
                 "threshold_violations": [],
                 "analyzed_at": datetime.now(timezone.utc).isoformat(),
             }
-            for t in names
+            for t, n in zip(names, rows)
         ]
 
     numeric_types = {
@@ -818,7 +827,7 @@ def collect_quality_metrics(
     }
 
     def table_metrics(tname: str) -> dict:
-        df = load_table(spark, sf_dir, tname)
+        df = frames[tname]
         cols = df.columns
         num_cols = [
             f.name
